@@ -57,7 +57,10 @@ def connected_components(nodes: DataFrame, pairs: DataFrame,
     """Component id (= min member id) per node.
 
     ``nodes``: one row per entity (singletons become their own component).
-    ``pairs``: undirected edges, any extra columns ignored.
+    ``pairs``: undirected edges, any extra columns ignored. Duplicates are
+    kept: labels stay correct, but every copy is re-joined each round, so
+    they multiply the per-round fan-out (and count against
+    ``driver_edge_cap``) — pass distinct edges if a pair can repeat.
     ``algorithm``: ``"auto"`` (small edge sets solved driver-side, then
     propagation, then alternating fallback past ``max_iters``),
     ``"propagation"`` (raises past ``max_iters``), or ``"alternating"``

@@ -153,8 +153,8 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
     # branches produce identical rows, pinned by the DuckDB oracle and a
     # pytest that forces the wide-span fallback.
     packable = False
-    if docs.schema[id_col].dataType.simpleString() in (
-            "int", "bigint", "smallint", "tinyint"):
+    id_type = docs.schema[id_col].dataType
+    if id_type.simpleString() in ("int", "bigint", "smallint", "tinyint"):
         lo_hi = docs.agg(F.min(id_col), F.max(id_col)).first()
         packable = (lo_hi[0] is not None
                     and int(lo_hi[1]) - int(lo_hi[0]) < (1 << 31))
@@ -170,15 +170,17 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 4, threshold: float = 0.25,
     # parallelism, not a constant tuned to this host.
     nparts = 8 * int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if packable:
-        lo = int(lo_hi[0])
-        p = (F.shiftleft(F.col("a") - F.lit(lo), 32)
-             + (F.col("b") - F.lit(lo)))
+        # in long: an int shifted by 32 wraps to a shift by 0 (colliding keys)
+        lo = F.lit(int(lo_hi[0])).cast("long")
+        p = (F.shiftleft(F.col("a").cast("long") - lo, 32)
+             + (F.col("b").cast("long") - lo))
         inter = (joined.select(p.alias("_p"))
                  .repartition(nparts, F.col("_p"))
                  .groupBy("_p").agg(F.count("*").alias("inter"))
-                 .select((F.shiftright(F.col("_p"), 32) + F.lit(lo)).alias("a"),
-                         (F.col("_p").bitwiseAND(F.lit((1 << 32) - 1))
-                          + F.lit(lo)).alias("b"),
+                 .select((F.shiftright(F.col("_p"), 32) + lo)
+                         .cast(id_type).alias("a"),
+                         (F.col("_p").bitwiseAND(F.lit((1 << 32) - 1)) + lo)
+                         .cast(id_type).alias("b"),
                          "inter"))
     else:
         inter = (joined.select("a", "b")

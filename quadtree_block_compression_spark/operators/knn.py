@@ -4,10 +4,11 @@ No reference counterpart — this is the engine-mandated nearest-neighbor
 operator over block centroids. Strategy (the H3 ``grid_ring`` pattern, run
 with Z-order cells):
 
-1. queries carry a cell at the index resolution;
+1. each query point falls in a grid cell at the index resolution;
 2. iteratively expand each *unsatisfied* query's candidate set with the
    cells at Chebyshev ring r = 0, 1, 2, … (an equi-join per ring on the cell
-   key — a shuffle-free broadcast join while the query side is small);
+   key — a shuffle-free broadcast join while the query side is small; the
+   shells are native ``functions.zorder.ring_cells`` projections);
 3. a query terminates when its kth-best distance so far is STRICTLY below
    ``ring · c`` (cell width c): any point in shell ``ring+1`` or beyond lies
    ≥ ``ring · c`` away (Chebyshev shell R is ≥ (R−1)·c in Euclidean distance
@@ -31,38 +32,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import broadcast
-from pyspark.sql.pandas.functions import pandas_udf
 
 from ..config import EngineConfig, DEFAULT_CONFIG
-
-
-def _query_cells(queries: DataFrame, res: int) -> DataFrame:
-    @pandas_udf("long")
-    def enc(x, y):  # type: ignore[misc]
-        import pandas as pd
-        from ..kernels.geometry import cell_encode
-        return pd.Series(cell_encode(x.to_numpy(dtype=float), y.to_numpy(dtype=float), res))
-    return queries.withColumn("cell", enc("x", "y"))
-
-
-def _ring_cells(queries: DataFrame, ring: int, prev_ring: int) -> DataFrame:
-    """Explode each query to the shell of cells at Chebyshev distance in
-    ``(prev_ring, ring]`` — the disk difference, so already-joined cells are
-    never re-joined."""
-    @pandas_udf("array<long>")
-    def ring_of(cell):  # type: ignore[misc]
-        import numpy as np
-        import pandas as pd
-        from ..kernels.geometry import cell_ring
-        if len(cell) == 0:
-            return pd.Series([], dtype=object)
-        full = cell_ring(cell.to_numpy(dtype=np.int64), ring)
-        if prev_ring < 0:
-            return pd.Series([np.unique(f).tolist() for f in full])
-        inner = cell_ring(cell.to_numpy(dtype=np.int64), prev_ring)
-        return pd.Series([np.setdiff1d(f, i).tolist() for f, i in zip(full, inner)])
-    return (queries.withColumn("join_cell", F.explode(ring_of("cell")))
-            .select("query_id", "x", "y", "k", "join_cell"))
+from ..functions.zorder import ring_cells
 
 
 def knn_ring(points: DataFrame, queries: DataFrame,
@@ -103,13 +75,13 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     cell_width = WORLD / (1 << res)
     spark = queries.sparkSession
     # persist: the density count plus every ring join rescans this side —
-    # without it any upstream work (scan, cell-encode UDF) reruns per round.
+    # without it any upstream work (scan, cell encode) reruns per round.
     # Tracked so the big side is released at the next query boundary rather
     # than pinned in the block manager for the session lifetime.
     from ..functions.cache import persist_tracked
     pts = persist_tracked(points.select("image_id", "tile_id", "wx", "wy", "cell"))
-    q = _query_cells(queries.select("query_id", "x", "y", "k"), res).localCheckpoint(eager=True)
-    q_schema = "query_id string, x double, y double, k int, cell long"
+    q = queries.select("query_id", "x", "y", "k").localCheckpoint(eager=True)
+    q_schema = "query_id string, x double, y double, k int"
 
     pending = q
     gathered: DataFrame | None = None
@@ -120,7 +92,7 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     if initial_ring is None:
         # count the PERSISTED projection: this first action populates the
         # cache every ring join then reads, instead of an extra uncached
-        # pass over the upstream (incl. the cell-encode UDF)
+        # pass over the upstream
         n_points = pts.count()
         density = max(n_points / float((1 << res) ** 2), 1e-9)
         k_max = queries.agg(F.max("k")).collect()[0][0] or 1
@@ -134,9 +106,8 @@ def knn_ring(points: DataFrame, queries: DataFrame,
     if pending.isEmpty():  # vacuous query set — checked ONCE, not per round
         radii = []
     for ring in radii:
-        ring_q = _ring_cells(pending, ring, prev)
-        cand = (pts.join(broadcast(ring_q) if use_broadcast else ring_q,
-                         pts["cell"] == F.col("join_cell"))
+        ring_q = ring_cells(pending, "x", "y", res, ring, prev)
+        cand = (pts.join(broadcast(ring_q) if use_broadcast else ring_q, "cell")
                 .select("query_id", "image_id", "tile_id",
                         F.sqrt(F.pow(F.col("wx") - F.col("x"), 2)
                                + F.pow(F.col("wy") - F.col("y"), 2)).alias("distance"))
@@ -172,7 +143,7 @@ def knn_ring(points: DataFrame, queries: DataFrame,
         # re-ranked from the whole gathered set. The _done flag rides a
         # partition-only window over the already-ranked rows — same
         # partitioning, no extra exchange or sort. Candidate (query, point)
-        # pairs are unique by construction (shells are disjoint setdiff1d
+        # pairs are unique by construction (shells are disjoint
         # disk differences; a point lives in one cell), so no dedup —
         # pytest-pinned via many-rounds equality with brute force.
         flagged = (g_pend.withColumn("_rn", F.row_number().over(wq))

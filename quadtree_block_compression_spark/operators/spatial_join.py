@@ -29,6 +29,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..config import EngineConfig, DEFAULT_CONFIG
+from ..functions.zorder import cell_of
 from ..kernels.geometry import MAX_RES, WORLD
 
 # images tile into a GRID×GRID mosaic of the world frame: image i occupies
@@ -41,23 +42,14 @@ def block_centroids(blocks: DataFrame, res: int | None = None,
                     cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Blocks → world-frame centroid points + cell key.
 
-    The affine and the cell encode are vectorized in one Arrow UDF (the
-    "batched, vectorized cell encode" the north rule names); everything
-    upstream/downstream stays JVM-side.
+    The affine and the cell encode are one native projection
+    (``functions.zorder``, the "batched, vectorized cell encode" the north
+    rule names) — no Python runner anywhere in the plan.
     """
     res = res if res is not None else cfg.spatial.cell_resolution
-    cell_w = WORLD / MOSAIC_GRID
-
-    @pandas_udf("long")
-    def cell_of(wx, wy):  # type: ignore[misc]
-        import pandas as pd
-        from ..kernels.geometry import cell_encode
-        return pd.Series(cell_encode(wx.to_numpy(dtype=float), wy.to_numpy(dtype=float), res))
-
+    cw = F.lit(WORLD / MOSAIC_GRID)
     # affine: image index (trailing digits of image_id, JVM regexp) picks the
-    # mosaic cell; the padded canvas [0, side)² scales onto it — pure column
-    # arithmetic, then ONE vectorized UDF call for the cell encode.
-    cw = F.lit(cell_w)
+    # mosaic cell; the padded canvas [0, side)² scales onto it
     with_w = (blocks
               .withColumn("_idx", F.regexp_extract("image_id", r"(\d+)$", 1).cast("long"))
               .withColumn("_side", ((F.col("x1") - F.col("x0"))
@@ -67,7 +59,7 @@ def block_centroids(blocks: DataFrame, res: int | None = None,
               .withColumn("wy", ((F.col("_idx") / MOSAIC_GRID).cast("long") % MOSAIC_GRID) * cw
                           + ((F.col("y0") + F.col("y1")) / 2.0) * cw / F.col("_side"))
               .drop("_idx", "_side"))
-    return with_w.withColumn("cell", cell_of("wx", "wy"))
+    return with_w.withColumn("cell", cell_of(F.col("wx"), F.col("wy"), res))
 
 
 def polygons_by_cell(geoms: DataFrame) -> DataFrame:

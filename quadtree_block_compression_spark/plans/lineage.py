@@ -2,9 +2,9 @@
 
 Each stage can emit one row per physical partition recording what flowed
 through it — the observability layer a 1000-executor run needs to prove
-identical outputs across cluster sizes and to locate skew. Implemented with
-``mapInPandas`` over the stage's output (Arrow pass-through, counting only)
-plus ``spark_partition_id()`` for cheap JVM-side variants.
+identical outputs across cluster sizes and to locate skew. Implemented
+JVM-side: a ``groupBy(spark_partition_id())`` count over the stage's
+output plus one stage-total row — no Python runner.
 """
 
 from __future__ import annotations

@@ -5,7 +5,8 @@ preemption. Model (SURVEY.md §2.9): each stage writes its output parquet +
 a manifest entry (stage name, row count, wall time, input fingerprint);
 ``run_stage`` skips any stage whose manifest entry is complete and whose
 fingerprint matches — resume is "read the last complete stage", exactly the
-``_SUCCESS``-style barrier pattern. Lineage rows are appended per stage.
+``_SUCCESS``-style barrier pattern. A rerun stage overwrites its own lineage
+directory, so a crash before the manifest save never duplicates lineage.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .lineage import partition_lineage
 
 MANIFEST = "manifest.json"
+LINEAGE = "_lineage"
 
 
 class StagedPipeline:
@@ -61,7 +63,7 @@ class StagedPipeline:
         out = self.spark.read.parquet(path)
         rows = out.count()
         lin = partition_lineage(out, name, weigh_col=lineage_weigh_col)
-        lin.write.mode("append").parquet(os.path.join(self.root, "_lineage"))
+        lin.write.mode("overwrite").parquet(os.path.join(self.root, LINEAGE, name))
         self.manifest[name] = {
             "complete": True,
             "fingerprint": fingerprint,
@@ -74,7 +76,7 @@ class StagedPipeline:
         return out
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_lineage"))
+        return self.spark.read.parquet(os.path.join(self.root, LINEAGE, "*"))
 
     def invalidate(self, name: str) -> None:
         self.manifest.pop(name, None)

@@ -3,8 +3,8 @@
 ``images`` scan → **S1** tile-assign → **S2** exact dedup → **S3** cell
 keys/centroids → **S4** spatial join → fidelity/lineage sinks. Every stage
 persists to parquet with a manifest fingerprint (config + input), so a
-preempted run resumes from the last complete stage; per-partition lineage
-rows accumulate under ``_lineage``.
+preempted run resumes from the last complete stage; each stage's
+per-partition lineage rows land under ``_lineage/<stage>``.
 """
 
 from __future__ import annotations

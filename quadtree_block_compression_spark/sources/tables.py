@@ -258,6 +258,7 @@ def _cluster_zorder(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """
     from pyspark.sql import functions as F
     from ..functions.cache import persist_tracked
+    from ..functions.zorder import interleave
     if _ZBITS * len(cols) > 62:
         raise ValueError(f"too many cluster columns ({len(cols)}) for "
                          f"{_ZBITS}-bit interleave")
@@ -285,13 +286,7 @@ def _cluster_zorder(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
                / span * top)
         s = F.coalesce(raw.cast("long"), F.lit(0))
         scaled.append(F.greatest(F.lit(0), F.least(F.lit(top), s)))
-    z = F.lit(0).cast("long")
-    for b in range(_ZBITS):
-        for i, s in enumerate(scaled):
-            z = z.bitwiseOR(F.shiftleft(
-                F.shiftright(s, b).bitwiseAND(F.lit(1)),
-                b * len(scaled) + i))
-    return (df.withColumn("_zkey", z)
+    return (df.withColumn("_zkey", interleave(scaled, _ZBITS))
             .repartitionByRange(n_files, "_zkey")
             .sortWithinPartitions("_zkey")
             .drop("_zkey"))

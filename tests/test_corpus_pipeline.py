@@ -100,7 +100,7 @@ def test_corpus_pipeline_mid_stage_kill_resume(spark, tmp_path, monkeypatch):
     assert manifest2["s3_near_dedup"]["complete"]
 
     # lineage continuity: exactly one pass per stage, none duplicated by the
-    # kill (lineage is appended only at a stage's completion barrier).
+    # kill (a rerun stage overwrites its own lineage directory).
     # Semantic comparison ONLY — each stage appends exactly one total row
     # (partition_id = -1) per pass, and per-stage row totals must match the
     # uninterrupted reference run. Physical partition counts are NOT

@@ -60,6 +60,21 @@ def test_ngram_jaccard_wide_id_span_fallback(docs, spark):
     assert base == spread_out and base
 
 
+@pytest.mark.parametrize("id_type", ["tinyint", "int", "bigint", "string"])
+def test_ngram_jaccard_id_types_match_bigint(docs, id_type):
+    """Every id type the operator accepts returns the bigint result: the
+    packed pair key must not collide for ids narrower than a long."""
+    from quadtree_block_compression_spark.operators.dedup_text import ngram_jaccard_pairs
+
+    def pairs(d):
+        return sorted((int(r.doc_a), int(r.doc_b), r.jaccard)
+                      for r in ngram_jaccard_pairs(d, n=3, threshold=0.1).collect())
+
+    want = pairs(docs)
+    assert want
+    assert pairs(docs.withColumn("doc_id", F.col("doc_id").cast(id_type))) == want
+
+
 def test_ngram_jaccard_max_df_cap(docs):
     from quadtree_block_compression_spark.operators.dedup_text import ngram_jaccard_pairs
     # cap at df<=1 drops every shared shingle → no pairs at all
@@ -518,6 +533,39 @@ def test_staged_pipeline_resume(spark, tmp_path):
     # lineage rows recorded per partition
     lin = p2.lineage()
     assert lin.filter("stage = 's1'").agg(F.sum("rows_out")).collect()[0][0] >= 100
+
+
+def test_staged_pipeline_lineage_idempotent_on_resume(spark, tmp_path, monkeypatch):
+    """A crash after a stage's lineage write but before its manifest save
+    re-runs the stage on resume; its lineage is replaced, not appended."""
+    from quadtree_block_compression_spark.plans.pipeline import StagedPipeline
+
+    def build():
+        return spark.range(100).withColumnRenamed("id", "x")
+
+    root = str(tmp_path / "pipe")
+    p = StagedPipeline(spark, root)
+    p.run_stage("s1", build, fingerprint="v1")
+    real_save = StagedPipeline._save
+
+    def crash(self):
+        raise RuntimeError("simulated crash before the manifest save")
+
+    monkeypatch.setattr(StagedPipeline, "_save", crash)
+    with pytest.raises(RuntimeError, match="manifest save"):
+        p.run_stage("s2", build, fingerprint="v1")
+    monkeypatch.setattr(StagedPipeline, "_save", real_save)
+
+    p2 = StagedPipeline(spark, root)
+    assert "s2" not in p2.manifest
+    p2.run_stage("s1", build, fingerprint="v1")
+    p2.run_stage("s2", build, fingerprint="v1")
+    totals = (p2.lineage().where(F.col("partition_id") == -1)
+              .groupBy("stage").agg(F.count(F.lit(1)).alias("passes"),
+                                    F.sum("rows_out").alias("rows"))
+              .collect())
+    assert {(r.stage, r.passes, r.rows) for r in totals} == {
+        ("s1", 1, 100), ("s2", 1, 100)}
 
 
 def test_lineage_summary(spark):

@@ -16,7 +16,7 @@ def test_all_plan_properties_hold(spark):
     # sanity: the audit actually covered the named plans (incl. the two
     # round-4 additions) rather than silently skipping sections
     text = "\n".join(report)
-    for section in ("tile_range_scan", "spatial_join_rects",
+    for section in ("tile_range_scan", "spatial_join_rects", "cell_assign",
                     "embedding_near_dup", "ann_lsh_topk", "ngram_jaccard",
                     "q5_local_supplier_volume", "assign_tiles",
                     "text_quality", "corpus_clean", "ivf_probe_index",

@@ -39,7 +39,9 @@ US = 1_000_000
 def _day_us(s):
     import datetime
 
-    d = datetime.datetime.fromisoformat(s)
+    # naive dates are UTC days: without the tzinfo, timestamp() would read
+    # them in the host's local zone
+    d = datetime.datetime.fromisoformat(s).replace(tzinfo=datetime.timezone.utc)
     return int(d.timestamp()) * US
 
 

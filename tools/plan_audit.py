@@ -136,6 +136,16 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
           })
 
+    # 2b. cell_assign: the Z-order encode is a native projection
+    p = qplan("cell_assign")
+    check("cell_assign (point → Z-order cell key)",
+          "The grid clamp and the Morton interleave are Column expressions "
+          "(`functions.zorder`): the plan has no Python runner at all.",
+          p, {
+              "no ArrowEvalPython": "ArrowEvalPython" not in p,
+              "no row-at-a-time Python": "BatchEvalPython" not in p,
+          })
+
     # 3. LSH near-dup: banded equi-joins, no cartesian
     p = qplan("embedding_near_dup")
     check("embedding_near_dup (hyperplane-LSH tier)",
@@ -378,7 +388,7 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     # the loop is driver-side control flow, so audit the exact join each
     # round issues rather than the checkpoint-severed final plan
     from pyspark.sql.functions import broadcast as _bcast
-    from quadtree_block_compression_spark.operators import knn as knn_mod
+    from quadtree_block_compression_spark.functions.zorder import ring_cells
     from quadtree_block_compression_spark.operators.spatial_join import (
         block_centroids)
     knn_pts = block_centroids(assign_tiles(images), res=6) \
@@ -386,32 +396,35 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     knn_q = spark.createDataFrame(
         [("q0", 100.0, 100.0, 3), ("q1", 900.0, 300.0, 2)],
         "query_id string, x double, y double, k int")
-    ring_q = knn_mod._ring_cells(knn_mod._query_cells(knn_q, 6), 2, -1)
-    p = fmt_plan(knn_pts.join(_bcast(ring_q),
-                              knn_pts["cell"] == F.col("join_cell")))
+    ring_q = ring_cells(knn_q, "x", "y", 6, 2, -1)
+    p = fmt_plan(knn_pts.join(_bcast(ring_q), "cell"))
     check("knn_ring round — broadcast tier",
           "Each ring round of the small-query tier is a broadcast hash "
           "join of the exploded shell cells against the cell-keyed points "
           "side; the big side is never hash-repartitioned and no round "
-          "degenerates to a cartesian.",
+          "degenerates to a cartesian. Shells and cell keys are native "
+          "`sequence`/`explode` projections — no Arrow eval in the round.",
           p, {
               "BroadcastHashJoin present": "BroadcastHashJoin" in p,
               "big side never shuffle-partitioned":
                   "Exchange hashpartitioning" not in p,
               "no CartesianProduct": "CartesianProduct" not in p,
+              "no ArrowEvalPython": "ArrowEvalPython" not in p,
           })
-    p = fmt_plan(knn_pts.join(ring_q, knn_pts["cell"] == F.col("join_cell")))
+    p = fmt_plan(knn_pts.join(ring_q, "cell"))
     check("knn_ring round — shuffle tier (corpus-sized query sets)",
           "With a corpus-sized query side the round is a plain cell "
           "equi-join (AQE free to pick the strategy) — still never a "
           "cartesian, and the pending set stays distributed (no driver "
-          "materialization exists in this tier by construction).",
+          "materialization exists in this tier by construction) — and no "
+          "Arrow eval.",
           p, {
               "cell equi-join present": ("SortMergeJoin" in p
                                          or "ShuffledHashJoin" in p
                                          or "BroadcastHashJoin" in p),
               "no CartesianProduct": "CartesianProduct" not in p,
               "no BroadcastNestedLoopJoin": "BroadcastNestedLoopJoin" not in p,
+              "no ArrowEvalPython": "ArrowEvalPython" not in p,
           })
 
     # 19. pii_redact: pure codegen projection (r5)
@@ -463,8 +476,8 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
     check("rasterize_rects (vector→raster burn-in)",
           "Polygon → covering-cell burn-in is a projection pipeline: two "
           "JVM sequence/explode steps over the (dimension-sized) geometry "
-          "side, one Arrow PIP eval, one Arrow cell-key eval — no join of "
-          "any kind, so nothing can shuffle the fan-out.",
+          "side, one Arrow PIP eval, a native cell-key projection — no join "
+          "of any kind, so nothing can shuffle the fan-out.",
           p, {
               "no join operator": all(k not in p for k in
                                       ("SortMergeJoin", "ShuffledHashJoin",
@@ -473,9 +486,9 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
               "JVM explode (Generate) present": "Generate" in p,
               # formatted explain prints every node twice (tree + details):
               # count the numbered detail headers, one per physical node
-              "Arrow evals only (verify + cell key)": len(
+              "exactly one Arrow eval (the PIP verify)": len(
                   [ln for ln in p.splitlines()
-                   if ln.startswith("(") and "ArrowEvalPython" in ln]) == 2,
+                   if ln.startswith("(") and "ArrowEvalPython" in ln]) == 1,
               "no row-at-a-time Python": "BatchEvalPython" not in p,
           })
 
@@ -496,18 +509,21 @@ def run_audit(spark) -> tuple[list[str], list[str]]:
           })
 
     # 23b. blocks→polygon join on the LIVE kernel output: the end-to-end
-    # raster→vector plan (mapInPandas tiling → Arrow affine+cell encode →
+    # raster→vector plan (mapInPandas tiling → native affine+cell encode →
     # broadcast PIP join) — no shuffle of the block side anywhere
     p = qplan("blocks_pip_join")
     check("blocks_pip_join (live blocks → polygon PIP join)",
           "Tile assignment is one Python-runner pass; the centroid affine "
-          "+ cell encode is Arrow-batched; candidates meet through the "
+          "+ cell encode is one native projection; candidates meet through the "
           "broadcast cell equi-join — the block side reaches the verify "
           "with NO exchange between the kernel and the join.",
           p, {
               "geometry side broadcast": "BroadcastHashJoin" in p,
               "no CartesianProduct": "CartesianProduct" not in p,
               "no row-at-a-time Python": "BatchEvalPython" not in p,
+              "exactly one Arrow eval (the PIP verify)": len(
+                  [ln for ln in p.splitlines()
+                   if ln.startswith("(") and "ArrowEvalPython" in ln]) == 1,
               "no shuffle of the block side": "Exchange hashpartitioning" not in
                   p.split("BroadcastHashJoin", 1)[0],
           })
